@@ -306,4 +306,32 @@ class PlanAuditSpec extends AnyFunSuite {
       "staging must not pin a corpus-sized cache")
     assert(!p.contains("Window"), "no window may touch per-document rows")
   }
+
+  /** Exchange counts of the similarity family's plans, pinned so a
+    * refactor of the shared quantizer/probe helpers is shown not to
+    * add, drop or move an exchange: (hash-partitioning exchanges,
+    * broadcast exchanges) per catalog key at the test SF. The session
+    * cache is cleared first: a persisted frame left by an earlier
+    * call of the same key changes how the cached sub-plans print, so
+    * the counts are taken on a cold cache whatever ran before.
+    */
+  private val similarityExchanges: Seq[(String, Int, Int)] = Seq(
+    ("d19_ivf_ann", 9, 8),
+    ("d37_ivf_index", 3, 3),
+    ("d42_topic_cluster", 3, 2),
+    ("d43_cluster_sample", 1, 3),
+    ("d50_pq_ann", 2, 6),
+    ("d51_ivfadc", 5, 6),
+    ("d57_adc_rerank", 6, 8),
+    ("d58_spann_ann", 6, 5))
+
+  similarityExchanges.foreach { case (key, hash, bcast) =>
+    test(s"$key: hash and broadcast exchange counts are pinned") {
+      spark.catalog.clearCache()
+      val p = plan(key)
+      val got = (shuffles(p),
+        p.linesIterator.count(_.contains("BroadcastExchange")))
+      assert(got == ((hash, bcast)), s"$key (hash, broadcast) exchanges")
+    }
+  }
 }
