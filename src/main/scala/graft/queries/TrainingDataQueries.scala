@@ -863,7 +863,7 @@ object TrainingDataQueries {
   /** Shared oracle CTE chain of every kmeans-quantizer operator
     * (d19/d37 IVF, d42 cluster report, d43 balanced sample): the
     * exact DuckDB twin of [[graft.similarity.Similarity.kmeansCentroids]]
-    * + argmax assignment at `kCentroids=16, lloydIters=1` on the
+    * + argmax assignment at `kCentroids=16` (one Lloyd step) on the
     * 64-dim `embeddings` table — seeds by smallest md5(id), one
     * exact-BIGINT Lloyd step, cosine argmax with ties to the
     * smallest centroid id. Ends with `assign(vec_id, cid)`; callers
@@ -1021,7 +1021,7 @@ object TrainingDataQueries {
       e, "vec_id", "embedding", idx, kCentroids = 0)
     graft.similarity.Similarity.ivfProbe(
       e.filter(col("vec_id") % 40 === 0), idx, "vec_id", "embedding",
-      k = 4, nprobe = 0, expectQuantizer = "kmeans")
+      k = 4, nprobe = 0)
   }
 
   val d37Sql: String = ivfOracleSql(40, 4, derivedKcNp = true)
@@ -1054,7 +1054,7 @@ object TrainingDataQueries {
       e.filter(col("vec_id") % 7 === 0), "vec_id", idx)
     graft.similarity.Similarity.ivfProbe(
       e.filter(col("vec_id") % 40 === 0), idx, "vec_id", "embedding",
-      k = 4, nprobe = 0, expectQuantizer = "kmeans")
+      k = 4, nprobe = 0)
   }
 
   val d68Sql: String = ivfOracleSql(40, 4, derivedKcNp = true,

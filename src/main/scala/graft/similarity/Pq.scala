@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import Similarity.{dot, norm2, toDouble}
@@ -55,70 +55,62 @@ object Pq {
 
   /** Train the `m` codebooks: one seeded-kmeans run per subspace over
     * the sliced frame. Returns (mi, cid, cv, cnrm) — at most `m·kc`
-    * rows, a dim-class frame made for broadcast. The corpus
-    * projection is persisted for the duration of the build only
-    * (same contract as the IVF builder).
+    * rows, a dim-class literal frame made for broadcast, built and
+    * collected in one job ([[Similarity.collectedCentroids]]: the
+    * corpus projection is persisted for the duration of the build
+    * only, and lazy consumers never re-run the m builds).
     */
   def trainCodebooks(corpus: DataFrame, id: String, vec: String,
-      m: Int, subDim: Int, kc: Int): DataFrame = {
-    val v = pqFrame(corpus, id, vec, m, subDim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val built = (0 until m).map { mi =>
-        val vmi = v.select(col("vid"),
-            slice(col("e"), mi * subDim + 1, subDim).as("v"))
-          .withColumn("nrm", norm2(col("v")))
-        Similarity.kmeansCentroids(vmi, kc)
-          .select(lit(mi).as("mi"), col("cid"), col("cv"), col("cnrm"))
-      }.reduce(_ unionAll _)
-      // bounded: m·kc rows; materialize NOW (dim-table collect, the
-      // litIndexCandidates contract) so the lazy consumers don't
-      // re-run m kmeans builds per downstream action
-      val rows = built.collect()
-      v.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), built.schema)
-    } finally v.unpersist()
-  }
+      m: Int, subDim: Int, kc: Int): DataFrame =
+    Similarity.collectedCentroids(pqFrame(corpus, id, vec, m, subDim))(
+      v => subspaces(v, "e", m, subDim, kc))
+
+  /** The `m` subspace codebook builds over a `(vid, vecCol)` frame:
+    * `(mi, (vid, v, nrm) slice frame, kc)` per subspace.
+    */
+  private def subspaces(v: DataFrame, vecCol: String, m: Int, subDim: Int,
+      kc: Int): Seq[(Int, DataFrame, Int)] =
+    (0 until m).map { mi =>
+      (mi, v.select(col("vid"),
+          slice(col(vecCol), mi * subDim + 1, subDim).as("v"))
+        .withColumn("nrm", norm2(col("v"))), kc)
+    }
+
+  /** One `code<mi>` argmax slot per subspace codebook. */
+  private def codeSlots(m: Int): Seq[(String, Option[Int])] =
+    (0 until m).map(mi => s"code$mi" -> Some(mi))
 
   /** Encode every vector to its `m` codes in ONE corpus pass: the
     * combined codebook (m·kc rows) broadcasts onto the vector frame,
     * each (vector, subspace) pair scores cosine map-side, and one
-    * partial aggregation takes the per-subspace argmax (ties to the
-    * smallest cid — [[Similarity.argmaxAssign]]'s rule). Output:
+    * partial aggregation takes the per-subspace argmax
+    * ([[Similarity.argmaxCids]] — ties to the smallest cid). Output:
     * (vid, code0..code{m-1}).
     */
   def encode(corpus: DataFrame, id: String, vec: String,
       codebooks: DataFrame, m: Int, subDim: Int): DataFrame = {
-    val v = pqFrame(corpus, id, vec, m, subDim)
     val sub = slice(col("e"), col("mi") * subDim + 1, lit(subDim))
-    val scored = v.crossJoin(broadcast(codebooks))
-      .select(col("vid"), col("mi"), struct(
-        (dot(sub, col("cv")) / (norm2(sub) * col("cnrm"))).as("csim"),
-        (-col("cid")).as("negc")).as("sc"))
-    scored.groupBy("vid")
-      .agg(
-        max(when(col("mi") === 0, col("sc"))).as("b0"),
-        (1 until m).map(mi =>
-          max(when(col("mi") === mi, col("sc"))).as(s"b$mi")): _*)
-      .select(col("vid") +:
-        (0 until m).map(mi => (-col(s"b$mi.negc")).as(s"code$mi")): _*)
+    Similarity.argmaxCids(pqFrame(corpus, id, vec, m, subDim), codebooks,
+      dot(sub, col("cv")) / (norm2(sub) * col("cnrm")), codeSlots(m))
   }
 
   /** Reconstruction: concat of the coded centroid per subspace —
     * `m` broadcast joins against the (m·kc)-row codebook, reading
-    * NOTHING but (vid, codes) from the encoded side. Returns
-    * (vid, re) where re is the dim-length reconstructed vector.
+    * NOTHING but (vid, codes) from the encoded side. Returns the
+    * encoded frame's non-code columns (vid, and IVFADC's coarse cid)
+    * plus `re`, the dim-length reconstructed vector.
     */
   def reconstruct(encoded: DataFrame, codebooks: DataFrame,
       m: Int): DataFrame = {
+    val codes = codeSlots(m).map(_._1)
     val joined = (0 until m).foldLeft(encoded) { (acc, mi) =>
       acc.join(
         broadcast(codebooks.filter(col("mi") === mi)
           .select(col("cid").as(s"code$mi"), col("cv").as(s"r$mi"))),
         s"code$mi")
     }
-    joined.select(col("vid"),
-      concat((0 until m).map(mi => col(s"r$mi")): _*).as("re"))
+    joined.select(encoded.columns.filterNot(codes.contains).map(col).toSeq :+
+      concat((0 until m).map(mi => col(s"r$mi")): _*).as("re"): _*)
   }
 
   /** IVFADC — the classic billion-scale composition (Jégou et al.
@@ -142,94 +134,44 @@ object Pq {
   def ivfAdcTopK(queries: DataFrame, corpus: DataFrame, id: String,
       vec: String, m: Int, subDim: Int, kc: Int, kcCoarse: Int = 0,
       nprobe: Int = 0, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = pqFrame(corpus, id, vec, m, subDim)
-    val vv = v.select(col("vid"), col("e").as("v"))
+    val vv = pqFrame(corpus, id, vec, m, subDim)
+      .select(col("vid"), col("e").as("v"))
       .withColumn("nrm", norm2(col("v")))
     // ONE persisted corpus projection serves the sizing count AND all
-    // m+1 quantizer builds, collected in ONE job (r17; the previous
-    // shape persisted the corpus twice — once here for the coarse
-    // chain, once inside trainCodebooks for the sub-chains — and ran
-    // two collect jobs). kcCoarse = 0 → the deployed sqrtKc policy
-    // over the PQ-valid corpus (the frame the quantizer trains on).
-    val (coarseRows, cbs, kcC) = {
-      val c = vv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val kcC = if (kcCoarse > 0) kcCoarse else Similarity.sqrtKc(c.count())
-        val coarse = Similarity.kmeansCentroids(c, kcC)
-          .select(lit(-1).as("mi"), col("cid"), col("cv"), col("cnrm"))
-        val subs = (0 until m).map { mi =>
-          val vmi = c.select(col("vid"),
-              slice(col("v"), mi * subDim + 1, subDim).as("v"))
-            .withColumn("nrm", norm2(col("v")))
-          Similarity.kmeansCentroids(vmi, kc)
-            .select(lit(mi).as("mi"), col("cid"), col("cv"), col("cnrm"))
-        }
-        val built = (coarse +: subs).reduce(_ unionAll _)
-        val rows = built.collect()
-        val all = vv.sparkSession.createDataFrame(
-          java.util.Arrays.asList(rows: _*), built.schema)
-        (all.filter(col("mi") === -1).select("cid", "cv", "cnrm"),
-          all.filter(col("mi") >= 0), kcC)
-      } finally c.unpersist()
+    // m+1 quantizer builds, collected in ONE job (r17). kcCoarse = 0
+    // → the deployed sqrtKc policy over the PQ-valid corpus (the
+    // frame the quantizer trains on). Coarse rows are tagged mi = -1.
+    var kcC = kcCoarse
+    val quantizers = Similarity.collectedCentroids(vv) { c =>
+      if (kcC <= 0) kcC = Similarity.sqrtKc(c.count())
+      (-1, c, kcC) +: subspaces(c, "v", m, subDim, kc)
     }
     val np = if (nprobe > 0) nprobe else Similarity.adaptiveNprobe(kcC)
     // FUSED single-pass assignment (r17): coarse cid and the m PQ
-    // codes are all per-row argmaxes against broadcast dim tables —
-    // computed in ONE corpus pass with ONE partial-agg exchange
-    // (coarse rows tagged mi = -1 score the full vector, sub rows the
-    // slice; CaseWhen evaluates only the taken branch). The previous
-    // shape ran TWO corpus passes (argmaxAssign + encode, one
-    // exchange each) and then JOINED them vid-to-vid — a third and
-    // fourth corpus exchange at the probe. Expressions and tie rules
-    // are bit-identical to argmaxAssign/encode (same dot, same
-    // (csim, -cid) struct max), so results are unchanged.
+    // codes are all per-row argmaxes against the one broadcast
+    // quantizer table — computed in ONE corpus pass with ONE
+    // partial-agg exchange (coarse rows score the full vector, sub
+    // rows the slice; CaseWhen evaluates only the taken branch), not
+    // an assignment pass and an encode pass joined vid-to-vid.
     val sub = slice(col("v"), col("mi") * subDim + 1, lit(subDim))
-    val score = when(col("mi") === -1,
-        dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-      .otherwise(dot(sub, col("cv")) / (norm2(sub) * col("cnrm")))
-    val scored = vv.crossJoin(broadcast(coarseRows
-        .select(lit(-1).as("mi"), col("cid"), col("cv"), col("cnrm"))
-        .unionAll(cbs)))
-      .select(col("vid"), col("mi"),
-        struct(score.as("csim"), (-col("cid")).as("negc")).as("sc"))
-    val fused = scored.groupBy("vid")
-      .agg(max(when(col("mi") === -1, col("sc"))).as("bc"),
-        (0 until m).map(mi =>
-          max(when(col("mi") === mi, col("sc"))).as(s"b$mi")): _*)
-      .select(col("vid") +: (-col("bc.negc")).as("cid") +:
-        (0 until m).map(mi => (-col(s"b$mi.negc")).as(s"code$mi")): _*)
-    // reconstruction rides the fused frame (broadcast codebook joins,
-    // keeping the coarse cid column alongside re)
-    val withRe = (0 until m).foldLeft(fused) { (acc, mi) =>
-        acc.join(
-          broadcast(cbs.filter(col("mi") === mi)
-            .select(col("cid").as(s"code$mi"), col("cv").as(s"r$mi"))),
-          s"code$mi")
-      }
-      .select(col("vid"), col("cid"),
-        concat((0 until m).map(mi => col(s"r$mi")): _*).as("re"))
+    val fused = Similarity.argmaxCids(vv, quantizers,
+      when(col("mi") === -1,
+          dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
+        .otherwise(dot(sub, col("cv")) / (norm2(sub) * col("cnrm"))),
+      ("cid" -> Some(-1)) +: codeSlots(m))
     val q = pqFrame(queries, id, vec, m, subDim)
-      .select(col("vid").as("q_id"), col("e").as("qe"))
-      .withColumn("qnrm", norm2(col("qe")))
-    val probes = q.crossJoin(broadcast(
-        coarseRows.select(col("cid"), col("cv"), col("cnrm"))))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(
-          (dot(col("qe"), col("cv")) / (col("qnrm") * col("cnrm"))).desc,
-          col("cid"))))
-      .filter(col("crk") <= np)
-      .select("q_id", "qe", "qnrm", "cid")
-    probes.join(withRe, "cid")
-      .filter(col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        (dot(col("qe"), col("re")) / (col("qnrm") * norm2(col("re"))))
-          .as("adc_cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id")
-          .orderBy(col("adc_cos").desc, col("n_id"))).cast("long"))
-      .filter(col("rk") <= k)
-      .select("q_id", "rk", "n_id", "adc_cos")
+      .select(col("vid").as("q_id"), col("e").as("qv"))
+      .withColumn("qnrm", norm2(col("qv")))
+    val coarse = quantizers.filter(col("mi") === -1)
+      .select("cid", "cv", "cnrm")
+    Similarity.topKCut(
+      Similarity.probeRank(q, coarse, np)
+        .join(reconstruct(fused, quantizers, m), "cid")
+        .filter(col("vid") =!= col("q_id"))
+        .select(col("q_id"), col("vid").as("n_id"),
+          (dot(col("qv"), col("re")) / (col("qnrm") * norm2(col("re"))))
+            .as("adc_cos")),
+      "adc_cos", k)
   }
 
   /** IVFADC+R — the re-ranked refinement of [[ivfAdcTopK]] (Jégou
@@ -255,7 +197,6 @@ object Pq {
   def ivfAdcRerank(queries: DataFrame, corpus: DataFrame, id: String,
       vec: String, m: Int, subDim: Int, kc: Int, kcCoarse: Int = 0,
       nprobe: Int = 0, kShort: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val shortlist = ivfAdcTopK(queries, corpus, id, vec, m, subDim,
         kc, kcCoarse, nprobe, kShort)
       .select(col("q_id"), col("n_id"))
@@ -267,16 +208,13 @@ object Pq {
     // the corpus vector table streams through the hash join reading
     // (vid, vec) only, with non-shortlisted rows dropped at the join
     val shortQ = shortlist.join(q, "q_id")
-    v.select(col("vid").as("n_id"), col("e").as("ne"),
-        norm2(col("e")).as("nnrm"))
-      .join(broadcast(shortQ), "n_id")
-      .select(col("q_id"), col("n_id"),
-        (dot(col("qe"), col("ne")) / (col("qnrm") * col("nnrm"))).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id")
-          .orderBy(col("cos").desc, col("n_id"))).cast("long"))
-      .filter(col("rk") <= k)
-      .select("q_id", "rk", "n_id", "cos")
+    Similarity.topKCut(
+      v.select(col("vid").as("n_id"), col("e").as("ne"),
+          norm2(col("e")).as("nnrm"))
+        .join(broadcast(shortQ), "n_id")
+        .select(col("q_id"), col("n_id"),
+          (dot(col("qe"), col("ne")) / (col("qnrm") * col("nnrm"))).as("cos")),
+      "cos", k)
   }
 
   /** Asymmetric-distance top-k: raw queries against the RECONSTRUCTED
@@ -287,18 +225,14 @@ object Pq {
     */
   def adcTopK(queries: DataFrame, encoded: DataFrame, codebooks: DataFrame,
       id: String, vec: String, m: Int, subDim: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val q = pqFrame(queries, id, vec, m, subDim)
       .select(col("vid").as("q_id"), col("e").as("qe"))
-    val recon = reconstruct(encoded, codebooks, m)
-    recon.join(broadcast(q), col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        (dot(col("qe"), col("re")) /
-          (norm2(col("qe")) * norm2(col("re")))).as("adc_cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id")
-          .orderBy(col("adc_cos").desc, col("n_id"))).cast("long"))
-      .filter(col("rk") <= k)
-      .select("q_id", "rk", "n_id", "adc_cos")
+    Similarity.topKCut(
+      reconstruct(encoded, codebooks, m)
+        .join(broadcast(q), col("vid") =!= col("q_id"))
+        .select(col("q_id"), col("vid").as("n_id"),
+          (dot(col("qe"), col("re")) /
+            (norm2(col("qe")) * norm2(col("re")))).as("adc_cos")),
+      "adc_cos", k)
   }
 }

@@ -354,20 +354,37 @@ object Similarity {
     }
   }
 
-  /** Map-side argmax assignment of each vector to its
-    * highest-cosine centroid (ties to the smallest centroid id —
-    * the same ordering a SQL oracle's row_number uses): struct-max
-    * aggregation over the broadcast (vectors × centroids) expansion,
-    * no window shuffle. The shared idiom of [[ivfTopK]] and d32's
-    * semantic dedup.
+  /** The struct-max argmax every nearest-centroid assignment runs:
+    * per vid, the centroid with the highest `csim` (scored on one row
+    * of the broadcast vectors × centroids expansion), ties to the
+    * smallest cid — the `max(struct(csim, -cid))` the SQL oracles
+    * mirror, i.e. their `ORDER BY csim DESC, cid`. Map-side partial
+    * aggregation, no window shuffle. One output column per slot:
+    * `name -> None` takes the argmax over every centroid, `name ->
+    * Some(mi)` over the centroids tagged `mi` only (PQ codes, one per
+    * subspace codebook; IVFADC's coarse cid and codes in one pass).
+    */
+  private[graft] def argmaxCids(v: DataFrame, cents: DataFrame,
+      csim: Column, slots: Seq[(String, Option[Int])]): DataFrame = {
+    val tagged = slots.exists(_._2.isDefined)
+    val scored = v.crossJoin(broadcast(cents)).select(
+      Seq(col("vid")) ++ (if (tagged) Seq(col("mi")) else Nil) :+
+        struct(csim.as("csim"), (-col("cid")).as("negc")).as("sc"): _*)
+    val best = slots.map { case (name, tag) =>
+      max(tag.fold(col("sc"))(mi => when(col("mi") === mi, col("sc")))).as(name)
+    }
+    scored.groupBy("vid").agg(best.head, best.tail: _*)
+      .select(col("vid") +:
+        slots.map { case (name, _) => (-col(s"$name.negc")).as(name) }: _*)
+  }
+
+  /** Assignment of each `(vid, v, nrm)` vector to its highest-cosine
+    * `(cid, cv, cnrm)` centroid ([[argmaxCids]]'s tie rule).
     */
   private[graft] def argmaxAssign(v: DataFrame, cents: DataFrame): DataFrame =
-    v.crossJoin(broadcast(cents))
-      .select(col("vid"), struct(
-        (dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))).as("csim"),
-        (-col("cid")).as("negc")).as("sc"))
-      .groupBy("vid").agg(max(col("sc")).as("best"))
-      .select(col("vid"), (-col("best.negc")).as("cid"))
+    argmaxCids(v, cents,
+      dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")),
+      Seq("cid" -> None))
 
   /** Deterministic seeded k-means coarse quantizer (one exact Lloyd
     * step — the d32 SemDeDup machinery): seeds are the `kCentroids`
@@ -391,16 +408,15 @@ object Similarity {
     * quantization scale, tie-break, or NaN guard must be mirrored
     * consciously, not inherited silently.
     */
-  private[graft] def kmeansCentroids(v: DataFrame, kCentroids: Int,
-      lloydIters: Int = 1): DataFrame = {
-    require(lloydIters >= 1, s"lloydIters must be >= 1: $lloydIters")
+  private[graft] def kmeansCentroids(v: DataFrame,
+      kCentroids: Int): DataFrame = {
     val seeds = v
       .orderBy(md5(col("vid").cast("string")), col("vid")).limit(kCentroids)
       .select(col("vid").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
     val xi = v.select(col("vid"),
       transform(col("v"),
         x => floor(x.cast("double") * 1000).cast("long")).as("xi"))
-    def step(cents: DataFrame): DataFrame = argmaxAssign(v, cents)
+    argmaxAssign(v, seeds)
       .join(xi, "vid")
       .select(col("cid"), posexplode(col("xi")))
       .groupBy("cid", "pos")
@@ -411,7 +427,35 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("comp")))),
         t => t("comp")).as("cv"))
       .withColumn("cnrm", norm2(col("cv")))
-    (1 to lloydIters).foldLeft(seeds) { (c, _) => step(c) }
+  }
+
+  /** Run seeded-kmeans builds EAGERLY and return every centroid table
+    * as ONE driver-local literal frame `(mi, cid, cv, cnrm)` — a
+    * dim-table collect (the [[litIndexCandidates]] contract), one
+    * job for all builds. `builds` receives `v` persisted and returns
+    * `(mi, (vid, v, nrm) frame, kCentroids)` per quantizer (the IVF
+    * coarse table, PQ's subspace codebooks). The persist lasts for
+    * the build only and is dropped in a finally, so the lazy frames
+    * callers derive from the literal depend on no cached state and a
+    * long-lived session leaks nothing (the one re-derivation they pay
+    * is a corpus scan + map-side argmax per action, cheaper at scale
+    * than a corpus-sized cache pinned for the lifetime of a result
+    * nobody may ever act on).
+    */
+  private[graft] def collectedCentroids(v: DataFrame)(
+      builds: DataFrame => Seq[(Int, DataFrame, Int)]): DataFrame = {
+    val vp = v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val built = builds(vp)
+        .map { case (mi, f, kc) =>
+          kmeansCentroids(f, kc)
+            .select(lit(mi).as("mi"), col("cid"), col("cv"), col("cnrm"))
+        }
+        .reduce(_ unionAll _)
+      val rows = built.collect()
+      v.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), built.schema)
+    } finally { vp.unpersist(); () }
   }
 
   /** IVF (inverted-file) approximate top-k — the scale path for
@@ -420,16 +464,11 @@ object Similarity {
     * `nprobe` nearest lists and brute-forces those. Corpus cost per
     * query drops from O(N) to O(N·nprobe/kCentroids) expected.
     *
-    * `quantizer` picks the centroid construction: `"kmeans"`
-    * (default) is the seeded one-Lloyd-step quantizer
+    * The centroids are the seeded one-Lloyd-step quantizer
     * ([[kmeansCentroids]] — deterministic AND data-adapted: centroids
     * move to the occupied region of embedding space, which evens out
-    * list sizes and raises probed-list recall); `"lowid"` keeps the
-    * legacy `kCentroids` lowest-id corpus vectors (centroids are then
-    * whatever those rows happen to be — kept for comparison, measured
-    * against kmeans in the AnnSweep ivf leg). Both are exactly
-    * reproducible, so the operator carries a full SQL oracle either
-    * way.
+    * list sizes and raises probed-list recall). It is exactly
+    * reproducible, so the operator carries a full SQL oracle.
     *
     * Scale shape: centroids broadcast everywhere (assignment is a
     * map-side argmax with partial aggregation — no per-vector
@@ -439,60 +478,71 @@ object Similarity {
     * (persisted) corpus — a build-time cost, amortized over queries.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, id: String, vec: String,
-      k: Int, kCentroids: Int = 16, nprobe: Int = 4,
-      quantizer: String = "kmeans", lloydIters: Int = 1): DataFrame = {
+      k: Int, kCentroids: Int = 16, nprobe: Int = 4): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Zero-norm vectors are excluded up front: 0/0 cosine is NaN,
     // whose ordering is engine-divergent (same guard as d17).
     // Vectors keep their source element type (float halves the
     // persisted bytes; VecDot widens per element — same arithmetic).
-    val v = corpus.select(col(id).as("vid"), col(vec).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .filter(col("nrm") > 0)
-      .persist(lvl)
-    val cents = (quantizer match {
-      case "kmeans" => kmeansCentroids(v, kCentroids, lloydIters)
-      case "lowid" => v.orderBy("vid").limit(kCentroids)
-        .select(col("vid").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-      case other => throw new IllegalArgumentException(
-        s"unknown quantizer: $other (kmeans|lowid)")
-      // kCentroids rows, used by assignment AND probes: without the
-      // persist each broadcast exchange would re-run the quantizer's
-      // corpus passes.
-    }).persist(lvl)
+    val v = vecFrame(corpus, id, vec).persist(lvl)
+    // kCentroids rows, used by assignment AND probes: without the
+    // persist each broadcast exchange would re-run the quantizer's
+    // corpus passes.
+    val cents = kmeansCentroids(v, kCentroids).persist(lvl)
     val lists = v.join(argmaxAssign(v, cents), "vid")
     probeTopK(queries, cents, lists, id, vec, k, nprobe)
   }
 
-  /** Shared probe stage of [[ivfTopK]] and [[ivfProbe]]: rank the
-    * broadcast centroids per query, keep the `nprobe` nearest lists,
-    * equi-join the (small, broadcast) probe set against the inverted
-    * lists on cid, exact-cosine within, window top-k. `lists` must
-    * carry (cid, vid, v, nrm) with zero-norm vectors already
-    * excluded; `cents` (cid, cv, cnrm).
+  /** Shared probe stage of [[ivfTopK]], [[ivfProbe]] and
+    * [[spannTopK]]: rank the broadcast centroids per query
+    * ([[probeRank]]), equi-join the (small, broadcast) probe set
+    * against the inverted lists on cid, exact-cosine within, top-k
+    * ([[topKCut]]). `lists` must carry (cid, vid, v, nrm) with
+    * zero-norm vectors already excluded; `cents` (cid, cv, cnrm).
+    * `distinctCandidates` drops repeated (query, candidate) pairs —
+    * needed only when a vector sits in more than one list (SPANN's
+    * closure assignment), so the single-list IVF plans pay no extra
+    * aggregation.
     */
   private def probeTopK(queries: DataFrame, cents: DataFrame,
       lists: DataFrame, id: String, vec: String, k: Int,
-      nprobe: Int): DataFrame = {
+      nprobe: Int, distinctCandidates: Boolean = false): DataFrame = {
     val q = queries.select(col(id).as("q_id"), col(vec).as("qv"))
       .withColumn("qnrm", norm2(col("qv")))
       .filter(col("qnrm") > 0)
-    val probes = q.crossJoin(broadcast(cents))
+    val scored = lists.join(broadcast(probeRank(q, cents, nprobe)), Seq("cid"))
+      .filter(col("vid") =!= col("q_id"))
+      .select(col("q_id"), col("vid").as("n_id"),
+        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
+    topKCut(if (distinctCandidates) scored.distinct() else scored, "cos", k)
+  }
+
+  /** The `nprobe` nearest centroids of each `(q_id, qv, qnrm)` query
+    * as `(q_id, qv, qnrm, cid)` rows: a window rank over the
+    * broadcast (queries × centroids) expansion, ties to the smallest
+    * cid (the oracle's `ORDER BY csim DESC, cid`).
+    */
+  private[graft] def probeRank(q: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    q.crossJoin(broadcast(cents))
       .select(col("q_id"), col("qv"), col("qnrm"), col("cid"),
         (dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm"))).as("csim"))
       .withColumn("crk", row_number().over(
         Window.partitionBy("q_id").orderBy(col("csim").desc, col("cid"))))
       .filter(col("crk") <= nprobe)
       .select("q_id", "qv", "qnrm", "cid")
-    val scored = lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
+
+  /** Per-query top-`k` of `(q_id, n_id, <score>)` candidate rows,
+    * ties to the smallest n_id, as `(q_id, rk, n_id, <score>)` with a
+    * BIGINT `rk` (the oracles cast their row_number the same way).
+    */
+  private[graft] def topKCut(scored: DataFrame, score: String,
+      k: Int): DataFrame =
+    scored
+      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
+        .orderBy(col(score).desc, col("n_id"))).cast("long"))
       .filter(col("rk") <= k)
-      .select("q_id", "rk", "n_id", "cos")
-  }
+      .select("q_id", "rk", "n_id", score)
 
   /** SPANN-style closure multi-assignment (Chen et al., "SPANN:
     * Highly-efficient Billion-scale Approximate Nearest Neighbor
@@ -555,31 +605,11 @@ object Similarity {
       vec: String, k: Int, kCentroids: Int = 16, deltaMilli: Long = 50,
       maxAssign: Int = 2, nprobe: Int = 1): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val v = corpus.select(col(id).as("vid"), col(vec).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .filter(col("nrm") > 0)
-      .persist(lvl)
+    val v = vecFrame(corpus, id, vec).persist(lvl)
     val cents = kmeansCentroids(v, kCentroids)
     val lists = v.join(closureAssign(v, cents, deltaMilli, maxAssign), "vid")
-    val q = queries.select(col(id).as("q_id"), col(vec).as("qv"))
-      .withColumn("qnrm", norm2(col("qv")))
-      .filter(col("qnrm") > 0)
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("qnrm"), col("cid"),
-        (dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm"))).as("csim"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("csim").desc, col("cid"))))
-      .filter(col("crk") <= nprobe)
-      .select("q_id", "qv", "qnrm", "cid")
-    val scored = lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .distinct()
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select("q_id", "rk", "n_id", "cos")
+    probeTopK(queries, cents, lists, id, vec, k, nprobe,
+      distinctCandidates = true)
   }
 
   /** Build the persisted IVF index a production similarity service
@@ -622,8 +652,7 @@ object Similarity {
     * same quantizer size; pass an explicit count to pin it.
     */
   def buildIvfIndex(corpus: DataFrame, id: String, vec: String,
-      indexDir: String, kCentroids: Int = 0, quantizer: String = "kmeans",
-      lloydIters: Int = 1): Unit = {
+      indexDir: String, kCentroids: Int = 0): Unit = {
     val s = corpus.sparkSession
     // Next generation: one past the live index's (a legacy flat index
     // counts as gen -1, so its successor is gen-0). The live data
@@ -632,7 +661,7 @@ object Similarity {
     val prevGen = ivfMetaFullIfExists(s, indexDir).map(_._5)
     val newGen = prevGen.map(g => math.max(g, -1) + 1).getOrElse(0)
     buildIvfGeneration(corpus.select(col(id).as("vid"), col(vec).as("v")),
-      indexDir, newGen, kCentroids, quantizer, lloydIters)
+      indexDir, newGen, kCentroids)
     sweepIvfGenerations(s, indexDir, keepGen = newGen,
       sweepLegacyFlat = prevGen.isDefined)
   }
@@ -646,8 +675,7 @@ object Similarity {
     * next build overwrites or sweeps).
     */
   private def buildIvfGeneration(vidV: DataFrame, indexDir: String,
-      gen: Int, kCentroids: Int, quantizer: String,
-      lloydIters: Int): Unit = {
+      gen: Int, kCentroids: Int): Unit = {
     val s = vidV.sparkSession
     val dataDir = ivfGenDir(indexDir, gen)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -664,14 +692,7 @@ object Similarity {
       // path sizes from, so build and drift-rebuild agree on the rule
       val nValid = v.count()
       val kc = if (kCentroids > 0) kCentroids else sqrtKc(nValid)
-      val cents = (quantizer match {
-        case "kmeans" => kmeansCentroids(v, kc, lloydIters)
-        case "lowid" => v.orderBy("vid").limit(kc)
-          .select(col("vid").as("cid"), col("v").as("cv"),
-            col("nrm").as("cnrm"))
-        case other => throw new IllegalArgumentException(
-          s"unknown quantizer: $other (kmeans|lowid)")
-      }).persist(lvl)
+      val cents = kmeansCentroids(v, kc).persist(lvl)
       cents.coalesce(1).write.mode("overwrite")
         .parquet(s"$dataDir/centroids")
       // co-locate each inverted list in one task before the
@@ -684,8 +705,7 @@ object Similarity {
         .write.mode("overwrite").partitionBy("cid")
         .parquet(s"$dataDir/lists")
       cents.unpersist()
-      commitIvfMeta(s, indexDir, quantizer, lloydIters, kc,
-        nBuild = nValid, gen = gen)
+      commitIvfMeta(s, indexDir, kc, nBuild = nValid, gen = gen)
     } finally v.unpersist()
   }
 
@@ -709,14 +729,14 @@ object Similarity {
     */
   def rebuildIvfIndex(s: org.apache.spark.sql.SparkSession,
       indexDir: String, kCentroids: Int = 0): Unit = {
-    val (quant, iters, _, _, gen) = ivfMetaFull(s, indexDir)
+    val gen = ivfMetaFull(s, indexDir)._5
     // ivfLists is tombstone-filtered, so the new generation simply
     // never contains removed vids — the rebuild IS the physical half
     // of [[removeFromIvfIndex]]'s contract.
     val vidV = ivfLists(s, indexDir).select(col("vid"), col("v"))
     val kc = if (kCentroids > 0) kCentroids else sqrtKc(vidV.count())
     val newGen = math.max(gen, -1) + 1
-    buildIvfGeneration(vidV, indexDir, newGen, kc, quant, iters)
+    buildIvfGeneration(vidV, indexDir, newGen, kc)
     // Clear tombstones only AFTER the meta commit: a crash mid-build
     // leaves the old generation live with its sidecar intact. A crash
     // between the commit and this delete leaves stale tombstones for
@@ -745,13 +765,16 @@ object Similarity {
     * fully, delete `meta`, rename `meta.next` → `meta`. The rename is
     * the atomic commit; the one residual window (crash between the
     * delete and the rename) is self-healing: [[ivfMetaDf]] completes
-    * the rename on the next read.
+    * the rename on the next read. The `quantizer`/`lloyd_iters`
+    * columns are written as the constants `("kmeans", 1)`: the one
+    * quantizer graft builds, kept so the on-disk format (and every
+    * index built before the columns lost their alternatives) stays
+    * unchanged.
     */
   private def commitIvfMeta(s: org.apache.spark.sql.SparkSession,
-      indexDir: String, quantizer: String, lloydIters: Int,
-      kCentroids: Int, nBuild: Long, gen: Int): Unit = {
+      indexDir: String, kCentroids: Int, nBuild: Long, gen: Int): Unit = {
     import s.implicits._
-    Seq((quantizer, lloydIters, kCentroids, nBuild, gen))
+    Seq(("kmeans", 1, kCentroids, nBuild, gen))
       .toDF("quantizer", "lloyd_iters", "k_centroids", "n_build", "gen")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta.next")
     val meta = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
@@ -795,8 +818,8 @@ object Similarity {
     s.read.parquet(s"$indexDir/meta")
   }
 
-  /** Full meta row with legacy defaults: `(quantizer, lloydIters,
-    * kCentroids, nBuild, gen)` — pre-r14 indexes carry neither
+  /** Full meta row with legacy defaults: `(quantizer, lloyd_iters,
+    * k_centroids, n_build, gen)` — pre-r14 indexes carry neither
     * `n_build` (→ -1: the drift check cannot run) nor `gen` (→ -1:
     * the flat `centroids`/`lists` layout).
     *
@@ -1054,9 +1077,7 @@ object Similarity {
           "run rebuildIvfIndex first (folds removals out), then append")
     }
     val cents = s.read.parquet(s"$dataDir/centroids")
-    val fresh = newVecs.select(col(id).as("vid"), col(vec).as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .filter(col("nrm") > 0)
+    val fresh = vecFrame(newVecs, id, vec)
       .join(listsAndTail(s, dataDir).select("vid"), Seq("vid"), "left_anti")
     val stage = graft.engine.Scratch.dir("graft_ivf_append_")
     try {
@@ -1073,8 +1094,9 @@ object Similarity {
     } finally graft.engine.Scratch.delete(stage)
   }
 
-  /** The (quantizer, lloydIters, kCentroids) a persisted IVF index
-    * was built with ([[buildIvfIndex]]'s meta row).
+  /** The `(quantizer, lloyd_iters, k_centroids)` columns of a
+    * persisted IVF index's meta row ([[buildIvfIndex]]); indexes
+    * graft builds always carry `("kmeans", 1, kc)`.
     */
   def ivfIndexMeta(s: org.apache.spark.sql.SparkSession,
       indexDir: String): (String, Int, Int) = {
@@ -1086,27 +1108,20 @@ object Similarity {
     * result to [[ivfTopK]] at the index's build parameters, with the
     * quantizer build amortized away: probe cost is one broadcast of
     * the kCentroids centroid rows plus a partition-pruned read of the
-    * `nprobe` probed lists per query batch. `expectQuantizer` /
-    * `expectKCentroids` / `expectLloydIters` (when supplied) are
-    * validated against the index meta and a contradiction throws —
-    * the d30 contract: parameters travel with the index, callers
-    * assert rather than assume.
+    * `nprobe` probed lists per query batch. `expectKCentroids` (when
+    * supplied) is validated against the index meta and a
+    * contradiction throws — the d30 contract: parameters travel with
+    * the index, callers assert rather than assume.
     */
   def ivfProbe(queries: DataFrame, indexDir: String, id: String, vec: String,
-      k: Int, nprobe: Int = 0, expectQuantizer: String = "",
-      expectKCentroids: Int = 0, expectLloydIters: Int = 0): DataFrame = {
+      k: Int, nprobe: Int = 0, expectKCentroids: Int = 0): DataFrame = {
     val s = queries.sparkSession
-    val (mq, mi, mkc) = ivfIndexMeta(s, indexDir)
-    def contradict(what: String, want: Any, got: Any): Nothing =
-      throw new IllegalStateException(
-        s"ivfProbe: index at $indexDir was built with $what=$got, " +
-          s"caller expects $want — rebuild the index or fix the caller")
-    if (expectQuantizer.nonEmpty && expectQuantizer != mq)
-      contradict("quantizer", expectQuantizer, mq)
+    val mkc = ivfIndexMeta(s, indexDir)._3
     if (expectKCentroids > 0 && expectKCentroids != mkc)
-      contradict("kCentroids", expectKCentroids, mkc)
-    if (expectLloydIters > 0 && expectLloydIters != mi)
-      contradict("lloydIters", expectLloydIters, mi)
+      throw new IllegalStateException(
+        s"ivfProbe: index at $indexDir was built with kCentroids=$mkc, " +
+          s"caller expects $expectKCentroids — rebuild the index or fix " +
+          "the caller")
     // nprobe = 0 → the deployed [[adaptiveNprobe]] rule over the
     // index's OWN kc (read from meta) — probes follow the quantizer
     // they actually hit, not the one the caller remembers
@@ -1123,31 +1138,6 @@ object Similarity {
     corpus.select(col(id).as("vid"), col(vec).as("v"))
       .withColumn("nrm", norm2(col("v")))
       .filter(col("nrm") > 0)
-
-  /** Run the seeded k-means build EAGERLY and return the centroids
-    * as a driver-local literal frame (kCentroids rows — the same
-    * dim-table collect contract as [[litIndexCandidates]]). The
-    * corpus projection is persisted only for the duration of the
-    * build and unpersisted in a finally — the LAZY frames the
-    * clustering entries return therefore depend on no cached state,
-    * so a long-lived session leaks nothing (the one re-derivation
-    * they pay is a single corpus scan + map-side argmax per action,
-    * cheaper at scale than a corpus-sized cache pinned for the
-    * lifetime of a result nobody may ever act on).
-    */
-  private def collectedCentroids(v: DataFrame, kCentroids: Int,
-      lloydIters: Int): DataFrame = {
-    val s = v.sparkSession
-    import s.implicits._
-    val vp = v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      kmeansCentroids(vp, kCentroids, lloydIters)
-        .select(col("cid"), toDouble(col("cv")).as("cv"), col("cnrm"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-        .toSeq.toDF("cid", "cv", "cnrm")
-    } finally { vp.unpersist(); () }
-  }
 
   /** Topic-clustering report over an embedded corpus: cluster every
     * vector with the deterministic seeded k-means quantizer
@@ -1173,10 +1163,9 @@ object Similarity {
     * nothing downstream of the one corpus scan is corpus-sized.
     */
   def clusterReport(corpus: DataFrame, id: String, vec: String,
-      labelCol: String, kCentroids: Int = 16,
-      lloydIters: Int = 1): DataFrame = {
+      labelCol: String, kCentroids: Int = 16): DataFrame = {
     val v = vecFrame(corpus, id, vec)
-    val cents = collectedCentroids(v, kCentroids, lloydIters)
+    val cents = collectedCentroids(v)(vp => Seq((0, vp, kCentroids)))
     labelRollup(argmaxAssign(v, cents)
       .join(corpus.select(col(id).as("vid"), col(labelCol).as("__lbl")),
         "vid"))
@@ -1237,13 +1226,13 @@ object Similarity {
     * one row per surviving vector `(id, cid, samp_pm, rate_pm)`.
     */
   def clusterBalancedSample(corpus: DataFrame, id: String, vec: String,
-      kCentroids: Int = 16, lloydIters: Int = 1,
-      budgetNumer: Long = 1L, budgetDenom: Long = 2L): DataFrame = {
+      kCentroids: Int = 16, budgetNumer: Long = 1L,
+      budgetDenom: Long = 2L): DataFrame = {
     require(budgetNumer >= 0 && budgetDenom > 0,
       s"budget fraction must be >= 0 with a positive denominator, " +
         s"got $budgetNumer/$budgetDenom")
     val v = vecFrame(corpus, id, vec)
-    val cents = collectedCentroids(v, kCentroids, lloydIters)
+    val cents = collectedCentroids(v)(vp => Seq((0, vp, kCentroids)))
     balancedSelect(argmaxAssign(v, cents), id, budgetNumer, budgetDenom)
   }
 

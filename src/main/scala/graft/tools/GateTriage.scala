@@ -4,9 +4,11 @@ import org.apache.spark.sql.functions._
 
 /** One-off stage-level timing of the c26/c28 ingest-gate composition
   * (the two most expensive bench keys at r17 start): span-index
-  * build, corpus count, IVF build (kmeans quantizer vs lists write),
-  * stream startup, and the gate epoch itself — so optimization
-  * effort lands where the seconds are (guide §1).
+  * build, corpus count, IVF build, stream startup, and the gate
+  * epoch itself — so optimization effort lands where the seconds
+  * are (guide §1). The IVF build's own stages are timed by the
+  * traced benchmark run (`perfbench/run.py --workload ingest_gate
+  * --trace 1`) against the real code, not replayed here.
   *
   *   sbt "runMain graft.tools.GateTriage [sfDir] [cpus]"
   */
@@ -52,38 +54,6 @@ object GateTriage {
       t("buildIvfIndex(total)") {
         Similarity.buildIvfIndex(emb, "doc_id", "ev", ivfIdx,
           kCentroids = Similarity.sqrtKc(n))
-      }
-      // buildIvfIndex internals, replayed standalone
-      locally {
-        val ivf2 = graft.engine.Scratch.dir("graft_triage_ivf2_")
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val v = emb.select(col("doc_id").as("vid"), col("ev").as("v"))
-          .withColumn("nrm", Similarity.norm2(col("v")))
-          .filter(col("nrm") > 0)
-          .persist(lvl)
-        val nValid = t("  build: v.count (persist)") { v.count() }
-        val kc = Similarity.sqrtKc(nValid)
-        val cents = t("  build: kmeans plan") {
-          graft.similarity.SimilarityTriage.kmeans(v, kc).persist(lvl)
-        }
-        t("  build: centroids write") {
-          cents.coalesce(1).write.mode("overwrite")
-            .parquet(s"$ivf2/gen-0/centroids")
-        }
-        t("  build: lists write") {
-          v.join(graft.similarity.SimilarityTriage.assign(v, cents), "vid")
-            .repartition(col("cid"))
-            .write.mode("overwrite").partitionBy("cid")
-            .parquet(s"$ivf2/gen-0/lists")
-        }
-        t("  build: meta write") {
-          import spark.implicits._
-          Seq(("kmeans", 1, kc, nValid, 0))
-            .toDF("quantizer", "lloyd_iters", "k_centroids", "n_build", "gen")
-            .coalesce(1).write.mode("overwrite").parquet(s"$ivf2/meta")
-        }
-        cents.unpersist(); v.unpersist()
-        graft.engine.Scratch.delete(ivf2)
       }
       val cfg = graft.streaming.StreamingOps.IngestGateConfig(
         weights = graft.queries.TrainingDataQueries.d41Weights(spark),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.similarity.Similarity
 
 /** Recall@k measurement for [[Similarity.ivfTopK]] — the evidence
-  * behind the d19 quantizer choice AND (round 11) the router's
+  * behind the d19 centroid count AND (round 11) the router's
   * deployed configuration. Measurement tooling, not query surface.
   *
   * Two kinds of corpus tokens:
@@ -80,11 +80,10 @@ object IvfCheck {
       val exact = Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 3)
         .select("q_id", "n_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      def leg(name: String, kc: Int, nprobe: Int, q: String = "kmeans",
-          iters: Int = 1): Double = {
+      def leg(name: String, kc: Int, nprobe: Int): Double = {
         val t0 = System.nanoTime()
         val got = Similarity.ivfTopK(queries, emb, "vec_id", "embedding", 3,
-            kCentroids = kc, nprobe = nprobe, quantizer = q, lloydIters = iters)
+            kCentroids = kc, nprobe = nprobe)
           .select("q_id", "n_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         val dt = (System.nanoTime() - t0) / 1e9
@@ -92,7 +91,7 @@ object IvfCheck {
         spark.catalog.clearCache()
         emb.persist(lvl); emb.count()
         val rec = (exact & got).size.toDouble / exact.size
-        println(f"IVFCHECK $tok n=$n nq=$nq $name%-7s $q%-7s iters=$iters " +
+        println(f"IVFCHECK $tok n=$n nq=$nq $name%-7s " +
           f"kc=$kc%5d nprobe=$nprobe%3d frac=${nprobe.toDouble / kc}%.4f " +
           f"recall@3=$rec%.3f sec=$dt%.1f")
         rec
@@ -102,8 +101,6 @@ object IvfCheck {
       val kcRouted = math.min(65536L, math.max(16L,
         math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
       if (legSel("kc16")) leg("kc16", 16, 4)
-      if (legSel("kc16x3")) for (i <- 1 to 3) leg("kc16", 16, 4, iters = i)
-      if (legSel("lowid")) leg("kc16", 16, 4, q = "lowid")
       if (legSel("routed")) leg("routed", kcRouted, 4)
       if (legSel("scaled"))
         leg("scaled", kcRouted, math.max(4, kcRouted / 32))

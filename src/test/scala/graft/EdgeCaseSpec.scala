@@ -91,12 +91,10 @@ class EdgeCaseSpec extends AnyFunSuite {
     val e = Seq.empty[(Long, Array[Float], String)]
       .toDF("vec_id", "embedding", "label")
     assert(Similarity.bruteForceTopK(e, e, "vec_id", "embedding", 5).count() == 0)
-    // both quantizers and the scale router degrade to zero rows, not
-    // a throw — an empty corpus yields an empty seed/centroid table
-    // and every downstream join is empty
+    // IVF and the scale router degrade to zero rows, not a throw — an
+    // empty corpus yields an empty seed/centroid table and every
+    // downstream join is empty
     assert(Similarity.ivfTopK(e, e, "vec_id", "embedding", 5).count() == 0)
-    assert(Similarity.ivfTopK(e, e, "vec_id", "embedding", 5,
-      quantizer = "lowid").count() == 0)
     assert(Similarity.annOrIvfTopK(e, e, "vec_id", "embedding", 5).count() == 0)
     spark.catalog.clearCache()
   }

@@ -135,8 +135,7 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, kCentroids = 8)
     val queries = emb.filter(col("vec_id") % 30 === 0)
     val viaIndex = Similarity.ivfProbe(queries, idx, "vec_id", "embedding",
-      k = 3, nprobe = 2, expectQuantizer = "kmeans", expectKCentroids = 8,
-      expectLloydIters = 1)
+      k = 3, nprobe = 2, expectKCentroids = 8)
     val fused = Similarity.ivfTopK(queries, emb, "vec_id", "embedding",
       k = 3, kCentroids = 8, nprobe = 2)
     // bit-identical: index round-tripping must not change results
@@ -152,10 +151,6 @@ class SimilaritySpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Similarity.ivfProbe(queries, idx, "vec_id", "embedding", 3,
         expectKCentroids = 16)
-    }
-    intercept[IllegalStateException] {
-      Similarity.ivfProbe(queries, idx, "vec_id", "embedding", 3,
-        expectQuantizer = "lowid")
     }
     spark.catalog.clearCache()
   }
@@ -301,18 +296,14 @@ class SimilaritySpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("kmeans quantizer adapts to clustered data where lowid centroids cannot") {
-    // The d19 upgrade contract, demonstrated where it matters: a
+  test("kmeans quantizer holds recall on clustered data with a biased low id range") {
+    // The d19 quantizer contract, demonstrated where it matters: a
     // corpus whose low id range is BIASED (all 16 lowest ids sit in
-    // just 2 of 32 clusters — the realistic lowid failure: ids
-    // correlate with ingest order, ingest order correlates with
-    // source). lowid's 16 near-parallel centroids fragment routing;
+    // just 2 of 32 clusters — ids correlate with ingest order, ingest
+    // order correlates with source). Centroids taken from the lowest
+    // ids would be 16 near-parallel vectors that fragment routing;
     // the seeded-kmeans quantizer's md5-spread seeds + Lloyd step
-    // move centroids onto the occupied clusters. On UNCLUSTERED data
-    // the two measure at parity within noise (IvfCheck at 200k:
-    // kmeans 0.58-0.60 vs lowid 0.61; sf0.001/sf0.1: kmeans ahead by
-    // 0.01-0.05) — this test pins the clustered case, where the
-    // adaptation is the whole point.
+    // move centroids onto the occupied clusters.
     import spark.implicits._
     val rnd = new java.util.Random(4242L)
     val dims = 64
@@ -329,24 +320,14 @@ class SimilaritySpec extends AnyFunSuite {
     val queries = corpus.filter(col("vec_id") % 20 === 0)
     val exact = Similarity.bruteForceTopK(queries, corpus, "vec_id", "embedding", 3)
       .select("q_id", "n_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def recall(q: String): Double = {
-      val got = Similarity.ivfTopK(queries, corpus, "vec_id", "embedding", 3,
-        kCentroids = 16, nprobe = 4, quantizer = q)
-        .select("q_id", "n_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.catalog.clearCache()
-      (exact & got).size.toDouble / exact.size
-    }
-    val rKmeans = recall("kmeans")
-    val rLowid = recall("lowid")
-    info(s"clustered corpus recall@3: kmeans=$rKmeans lowid=$rLowid")
-    assert(rKmeans > rLowid,
-      s"kmeans must beat biased-lowid on clustered data: $rKmeans vs $rLowid")
+    val got = Similarity.ivfTopK(queries, corpus, "vec_id", "embedding", 3,
+        kCentroids = 16, nprobe = 4)
+      .select("q_id", "n_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    spark.catalog.clearCache()
+    val rKmeans = (exact & got).size.toDouble / exact.size
+    info(s"clustered corpus recall@3: kmeans=$rKmeans")
     assert(rKmeans >= 0.6, s"kmeans ivf recall too low: $rKmeans")
-    intercept[IllegalArgumentException] {
-      Similarity.ivfTopK(queries, corpus, "vec_id", "embedding", 3,
-        quantizer = "nope").collect()
-    }
   }
 
   test("near-dup pairs are symmetric-free and above threshold") {
