@@ -435,15 +435,23 @@ object TimeSeriesOps {
           (acc, x) => x * a + acc * b).as("ewma"))
   }
 
+  /** Per-key z-score `(value - mean) / sd` with the sample standard
+    * deviation. `z` is NULL where it is undefined: a key with one
+    * reading (`n - 1 = 0`) or a constant key (`sd = 0`). Under ANSI
+    * mode a bare `/ 0` raises DIVIDE_BY_ZERO; SQL engines without
+    * ANSI (DuckDB, the c8 oracle) return NULL, which this matches.
+    */
   def zscore(df: DataFrame, key: Column, value: Column): DataFrame = {
     val stats = df.groupBy(key.as("__k")).agg(
       count(lit(1)).as("__n"),
       sum(value.cast("decimal(18,2)")).cast("double").as("__sum"),
       sum((value * value).cast("decimal(22,4)")).cast("double").as("__sumsq"))
       .select(col("__k"), (col("__sum") / col("__n")).as("__mean"),
-        sqrt((col("__sumsq") - col("__sum") * col("__sum") / col("__n")) /
-          (col("__n") - 1)).as("__sd"))
+        when(col("__n") > 1,
+          sqrt((col("__sumsq") - col("__sum") * col("__sum") / col("__n")) /
+            (col("__n") - 1))).as("__sd"))
     df.join(broadcast(stats), key === col("__k"))
-      .withColumn("z", (value - col("__mean")) / col("__sd"))
+      .withColumn("z",
+        when(col("__sd") =!= 0, (value - col("__mean")) / col("__sd")))
   }
 }

@@ -57,4 +57,17 @@ class TimeSeriesSpec extends AnyFunSuite {
       .filter(abs(col("z")) > 2.5).select("id").as[Long].collect().toSeq
     assert(flagged == Seq(20L))
   }
+
+  test("zscore is null, not a divide-by-zero, for one-reading and constant keys") {
+    import spark.implicits._
+    // key 1: one reading (n - 1 = 0); key 2: constant (sd = 0);
+    // key 3: spread values keep a defined z
+    val df = Seq((1, 0L, 5.0), (2, 1L, 7.0), (2, 2L, 7.0), (2, 3L, 7.0),
+      (3, 4L, 1.0), (3, 5L, 3.0)).toDF("k", "id", "value")
+    val z = TimeSeriesOps.zscore(df, col("k"), col("value"))
+      .select("id", "z").as[(Long, Option[Double])].collect().toMap
+    assert((0L to 3L).forall(i => z(i).isEmpty), z)
+    assert(z(4L).exists(v => math.abs(v + math.sqrt(0.5)) < 1e-9), z)
+    assert(z(5L).exists(v => math.abs(v - math.sqrt(0.5)) < 1e-9), z)
+  }
 }
