@@ -17,27 +17,51 @@ package graft.engine
   * exception is rethrown (unwrapped) after all tasks settle, so a
   * crash mid-parallel-build leaves the same converging retry state
   * as the sequential order it replaces.
+  *
+  * Interrupt-safe: if the calling thread is interrupted while it
+  * waits, every task is cancelled (its thread interrupted) and
+  * `run` still waits until every task has stopped before it
+  * rethrows the InterruptedException with the caller's interrupt
+  * flag restored. No task outlives the call, so a caller's
+  * `finally` (e.g. a scratch-dir delete) never races a live writer.
   */
 object Parallel {
   def run(tasks: (() => Unit)*): Unit = {
     if (tasks.lengthCompare(1) <= 0) { tasks.foreach(_.apply()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.length)
-    try {
-      val futs = tasks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
-        })
+    val futs = tasks.map { t =>
+      pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = t()
+      })
+    }
+    pool.shutdown()
+    var firstFailure: Throwable = null
+    try futs.foreach { f =>
+      try f.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          if (firstFailure == null)
+            firstFailure = Option(e.getCause).getOrElse(e)
       }
-      var firstFailure: Throwable = null
-      futs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure == null)
-              firstFailure = Option(e.getCause).getOrElse(e)
-        }
-      }
-      if (firstFailure != null) throw firstFailure
-    } finally pool.shutdown()
+    } catch {
+      case e: InterruptedException =>
+        futs.foreach(_.cancel(true))
+        awaitUninterruptibly(pool)
+        Thread.currentThread().interrupt()
+        throw e
+    }
+    if (firstFailure != null) throw firstFailure
+  }
+
+  /** Wait for a shut-down pool's threads to finish, deferring (not
+    * dropping) any interrupt that arrives meanwhile.
+    */
+  private def awaitUninterruptibly(
+      pool: java.util.concurrent.ExecutorService): Unit = {
+    var done = false
+    while (!done) {
+      try done = pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+      catch { case _: InterruptedException => }
+    }
   }
 }

@@ -182,4 +182,39 @@ class Round17OpsSpec extends AnyFunSuite {
     assert(e.getMessage == "boom")
     assert(hits.get() == 4)
   }
+
+  test("Parallel.run interrupted mid-run cancels its tasks and returns only after they stop") {
+    val running = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.CountDownLatch(2)
+    // each task blocks until interrupted, then takes 300 ms to wind
+    // down — a writer finishing its current file after cancellation
+    val task = () => {
+      running.incrementAndGet()
+      try { started.countDown(); Thread.sleep(60000) }
+      catch { case _: InterruptedException => }
+      finally {
+        val until = System.nanoTime() + 300L * 1000 * 1000
+        while (System.nanoTime() < until) Thread.onSpinWait()
+        running.decrementAndGet()
+      }
+      ()
+    }
+    @volatile var stillRunning = -1
+    @volatile var interrupted = false
+    @volatile var flagRestored = false
+    val caller = new Thread(() => {
+      try graft.engine.Parallel.run(task, task)
+      catch { case _: InterruptedException => interrupted = true }
+      flagRestored = Thread.currentThread().isInterrupted
+      stillRunning = running.get()
+    })
+    caller.start()
+    assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    caller.interrupt()
+    caller.join(30000)
+    assert(!caller.isAlive, "run must return after an interrupt")
+    assert(interrupted, "the InterruptedException must reach the caller")
+    assert(flagRestored, "the caller's interrupt flag must be restored")
+    assert(stillRunning == 0, "no task may still run when run returns")
+  }
 }
