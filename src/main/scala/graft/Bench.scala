@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 
 /** Driver benchmark: one timed pass over every SURVEY §2 query at
   * SPARK_GRAFT_SF_DIR, after warming the session (FS cache, JIT,
@@ -9,11 +10,16 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // parsed once: line 1 prints this Int, never the raw string (a
+    // zero-padded "04" would otherwise make the line invalid JSON)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }.getOrElse(4)
     // One engine posture everywhere: the timings must come from the
     // same session config graft.engine.Session defines.
     val spark = graft.engine.Session
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt,
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus,
         appName = "graft-bench")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
@@ -23,7 +29,7 @@ object Bench {
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     }
 
     // Optional comma-separated query filter for local iteration.
@@ -42,11 +48,11 @@ object Bench {
     // string compare would subtract the stream-startup baseline from
     // timings measured on the same data, clamping streaming keys to 0).
     def canon(p: String): String =
-      try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
+      try new java.io.File(p).getCanonicalPath catch { case NonFatal(_) => p }
     val warmIsTimed = canon(warmDir) == canon(sfDir)
     if (new java.io.File(warmDir).isDirectory && !warmIsTimed)
       catalog.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => }
+        try fn(spark, warmDir).count() catch { case NonFatal(_) => }
         spark.catalog.clearCache()
       }
 
@@ -75,7 +81,7 @@ object Bench {
             graft.streaming.StreamingOps.readEventsStream(spark, warmDir)
               .select("event_id"),
             spark, s"bench_stream_noop_$i", "append").count()
-          catch { case _: Throwable => }
+          catch { case NonFatal(_) => }
           (System.nanoTime() - t0) / 1e9
         }.min
       } else 0.0
@@ -100,7 +106,7 @@ object Bench {
         val ok =
           try { fn(spark, sfDir).count(); true }
           catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
               false
           }
@@ -238,7 +244,7 @@ object Bench {
           // so scale reads compare trailing-vs-trailing.
           val medTrail = (epochSecs(2) + epochSecs(3)) / 2
           s"""{"epoch_sec":[${epochSecs.mkString(",")}],"median":$med,"median_trailing":$medTrail}"""
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"BENCH gate_soak failed: ${e.getMessage}")
           "null"
         }
