@@ -766,10 +766,9 @@ object Similarity {
     * the atomic commit; the one residual window (crash between the
     * delete and the rename) is self-healing: [[ivfMetaDf]] completes
     * the rename on the next read. The `quantizer`/`lloyd_iters`
-    * columns are written as the constants `("kmeans", 1)`: the one
-    * quantizer graft builds, kept so the on-disk format (and every
-    * index built before the columns lost their alternatives) stays
-    * unchanged.
+    * columns always hold `("kmeans", 1)`, the one quantizer graft
+    * builds; they stay in the row so the on-disk meta format, and
+    * every reader of it, is unchanged.
     */
   private def commitIvfMeta(s: org.apache.spark.sql.SparkSession,
       indexDir: String, kCentroids: Int, nBuild: Long, gen: Int): Unit = {
